@@ -1,7 +1,7 @@
 package graft.app
 
 import java.time.Clock
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import graft.Sessions
 import graft.io.TableIo
 import graft.ops.DateOps
@@ -37,20 +37,19 @@ object Main {
     val lookupCatalog = Catalog.build(spark, storage, lookupRoot)
     val summaries = scala.collection.mutable.ArrayBuffer.empty[LoadSummary]
 
-    def loadCsvByName(name: String, trimHeaders: Boolean = false): Option[DataFrame] = {
-      val m = Catalog.firstMatch(lookupCatalog, Catalog.nameEquals(name))
-      val df = m.map(f => TableIo.readCsv(spark, f.file_path, trimHeaders))
-      summaries += LoadSummary(name, df.isDefined, df.map(_.count()).getOrElse(0L))
-      if (df.isEmpty) System.err.println(s"[graft] WARN: input '$name' not found — skipping")
-      df
-    }
-    def loadCsvContaining(sub: String): Option[DataFrame] = {
-      val m = Catalog.firstMatch(lookupCatalog,
-        Catalog.nameContains(sub) && Catalog.hasExtension(".csv"))
+    // a lookup CSV that is not found is warned about and its pipeline
+    // skipped (the reference's warn-and-skip, ref 85-86, 131-132, 152-153)
+    def loadCsv(label: String, matches: Column): Option[DataFrame] = {
+      val m = Catalog.firstMatch(lookupCatalog, matches)
       val df = m.map(f => TableIo.readCsv(spark, f.file_path))
-      summaries += LoadSummary(s"*$sub*", df.isDefined, df.map(_.count()).getOrElse(0L))
+      summaries += LoadSummary(label, df.isDefined, df.map(_.count()).getOrElse(0L))
+      if (df.isEmpty) System.err.println(s"[graft] WARN: input '$label' not found — skipping")
       df
     }
+    def loadCsvByName(name: String): Option[DataFrame] =
+      loadCsv(name, Catalog.nameEquals(name))
+    def loadCsvContaining(sub: String): Option[DataFrame] =
+      loadCsv(s"*$sub*", Catalog.nameContains(sub) && Catalog.hasExtension(".csv"))
 
     // primary PUA extract: substring "PUA" + Excel extension (ref 67-70)
     val puaFile = Catalog.firstMatch(catalog,
@@ -77,6 +76,11 @@ object Main {
     val certMn = loadCsvContaining("MN")
 
     val written = scala.collection.mutable.ArrayBuffer.empty[String]
+    // one execution of the pipeline's plan feeds both stamped files
+    def writeSinks(out: DataFrame, prefix: String): Seq[String] =
+      TableIo.writeCsvXlsx(out, storage, outFolder,
+        DateOps.stampedName(prefix, ".csv", clock),
+        DateOps.stampedName(prefix, ".xlsx", clock))
 
     // each pipeline's build→materialize→write unit runs under a tracking
     // CacheScope: any operator-internal persist made while the pipeline
@@ -87,20 +91,14 @@ object Main {
     for (p <- pua; o <- tsOrg; d <- tsDept; ot <- overtime; te <- teM)
       graft.ops.CacheScope.using { implicit scope =>
         val out = PuaPipeline.run(PuaPipeline.Inputs(p, o, d, ot, te))
-        written += TableIo.writeCsv(out, storage, outFolder,
-          DateOps.stampedName("PUA", ".csv", clock))
-        written += TableIo.writeXlsx(out, storage, outFolder,
-          DateOps.stampedName("PUA", ".xlsx", clock))
+        written ++= writeSinks(out, "PUA")
       }
     for (bw <- certBw; mn <- certMn; o <- tsOrg; d <- tsDept;
          ot <- overtime; te <- teM)
       graft.ops.CacheScope.using { implicit scope =>
         val out = CpaPipeline.run(
           CpaPipeline.Inputs(bw, mn, o, d, ot, te), clock)
-        written += TableIo.writeCsv(out, storage, outFolder,
-          DateOps.stampedName("CPA", ".csv", clock))
-        written += TableIo.writeXlsx(out, storage, outFolder,
-          DateOps.stampedName("CPA", ".xlsx", clock))
+        written ++= writeSinks(out, "CPA")
       }
 
     summaries.foreach(s =>

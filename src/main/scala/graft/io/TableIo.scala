@@ -1,5 +1,7 @@
 package graft.io
 
+import java.time.{Instant, LocalTime, ZoneId}
+import java.time.format.DateTimeFormatter
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType, TimestampType}
@@ -192,13 +194,6 @@ object TableIo {
   def readOrc(spark: SparkSession, path: String): DataFrame =
     spark.read.orc(path)
 
-  /** ORC sink, sharded by partition like [[writeJsonl]]. */
-  def writeOrc(df: DataFrame, path: String,
-               shards: Option[Int] = None): Unit = {
-    val out = shards.fold(df)(n => df.repartition(n))
-    out.write.mode("overwrite").orc(path)
-  }
-
   /** S4 — Excel source via the hand-rolled codecs: header row 0, all
     * values string (date-styled cells resolve to ISO strings through
     * the style table — [[ExcelDates]]). `sheetName = None` reads the
@@ -225,48 +220,75 @@ object TableIo {
       spark.sparkContext.parallelize(data.toSeq, 1), schema)
   }
 
-  /** S6 — CSV sink: ONE file, header, UTF-8, no index column, rows in
-    * ingest order (ref 396-403, 606-613). Outputs are small by contract
-    * (post-aggregation pipeline results), so the bytes are assembled
-    * driver-side and written through the StorageClient — this is the
-    * collect-and-write path the survey documents; large results would use
-    * df.write.csv. Timestamps are rendered ISO `yyyy-MM-dd HH:mm:ss`
-    * (pandas default). */
-  def writeCsv(df: DataFrame, storage: StorageClient, folder: String,
-               name: String): String =
-    storage.writeBytes(folder, name, csvBytes(df))
+  /** S6 + S7 — the payroll sinks (ref 396-417, 606-627): one CSV and one
+    * XLSX per pipeline, both rendered from ONE execution of the
+    * pipeline's plan ([[collectOrdered]]), ordered on the driver. Outputs
+    * are small by contract (post-aggregation pipeline results), so the
+    * bytes are assembled driver-side and written through the
+    * StorageClient — the collect-and-write path the survey documents;
+    * large results would use df.write. Both files are rendered before
+    * either is written. Returns the two paths, CSV first. */
+  def writeCsvXlsx(df: DataFrame, storage: StorageClient, folder: String,
+                   csvName: String, xlsxName: String): Seq[String] = {
+    val t = collectOrdered(df)
+    val csv = renderCsv(t)
+    val xlsx = Xlsx.write(t.fields.map(_.name), xlsxRows(t))
+    Seq(storage.writeBytes(folder, csvName, csv),
+      storage.writeBytes(folder, xlsxName, xlsx))
+  }
 
   /** CSV bytes matching pandas `to_csv` byte-for-byte (verified against
     * pandas 2.2 semantics): LF line endings on every line; a datetime
     * column whose non-null values are all midnight renders date-only
     * (`2024-07-01`), otherwise `yyyy-MM-dd HH:mm:ss[.ffffff]`; a null in a
     * datetime column (NaT) renders as a QUOTED empty field (`""`), while a
-    * null in any other column renders as an unquoted empty field. */
-  def csvBytes(df: DataFrame): Array[Byte] = {
-    import java.time.ZoneOffset
-    import java.time.format.DateTimeFormatter
-    val out = DedupOps.sortAndDropOrdinal(df)
-    val fields = out.schema.fields
-    val rows = out.collect() // small-by-contract sink (post-aggregation)
-    val isTs = fields.map(_.dataType == TimestampType)
-    def instantAt(r: Row, i: Int): java.time.Instant = r.get(i) match {
-      case t: java.sql.Timestamp => t.toInstant
-      case t: java.time.Instant  => t
-      case other => throw new IllegalStateException(s"not a timestamp: $other")
+    * null in any other column renders as an unquoted empty field.
+    * Timestamps render in the session time zone, the zone
+    * `try_to_timestamp` parsed them in. */
+  def csvBytes(df: DataFrame): Array[Byte] = renderCsv(collectOrdered(df))
+
+  /** A sink frame on the driver: data fields and rows in ingest order,
+    * plus the session time zone its timestamps render in. */
+  private final case class Collected(fields: IndexedSeq[StructField],
+                                     rows: Array[Row], zone: ZoneId)
+
+  /** The one Spark execution behind every sink: collect the frame as-is
+    * and order the rows by `_ingest_ord` here. The rows land on the
+    * driver anyway, so a Spark global sort (a range-sampling job plus an
+    * exchange) would buy nothing. The ordinal itself is dropped. */
+  private def collectOrdered(df: DataFrame): Collected = {
+    val zone = ZoneId.of(
+      df.sparkSession.conf.get("spark.sql.session.timeZone"), ZoneId.SHORT_IDS)
+    val fields = df.schema.fields.toIndexedSeq
+    val rows = df.collect() // small-by-contract sink (post-aggregation)
+    val ord = fields.indexWhere(_.name == DedupOps.OrdinalCol)
+    if (ord < 0) Collected(fields, rows, zone)
+    else {
+      val keep = fields.indices.filter(_ != ord)
+      val sorted = rows.sortBy(_.getLong(ord))
+      Collected(keep.map(fields), sorted.map(r => Row.fromSeq(keep.map(r.get))), zone)
     }
+  }
+
+  private def instantAt(r: Row, i: Int): Instant = r.get(i) match {
+    case t: java.sql.Timestamp => t.toInstant
+    case t: Instant            => t
+    case other => throw new IllegalStateException(s"not a timestamp: $other")
+  }
+
+  private def renderCsv(t: Collected): Array[Byte] = {
+    val Collected(fields, rows, zone) = t
+    val isTs = fields.map(_.dataType == TimestampType)
     // pandas renders a datetime column date-only iff every non-null value
     // is exactly midnight (DatetimeIndex "dates only" formatting)
     val dateOnly = fields.indices.map { i =>
       isTs(i) && rows.forall { r =>
-        r.isNullAt(i) || {
-          val t = instantAt(r, i)
-          t.getEpochSecond % 86400 == 0 && t.getNano == 0
-        }
+        r.isNullAt(i) || instantAt(r, i).atZone(zone).toLocalTime == LocalTime.MIDNIGHT
       }
     }
-    val fmtDate = DateTimeFormatter.ofPattern("yyyy-MM-dd").withZone(ZoneOffset.UTC)
-    val fmtSec = DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss").withZone(ZoneOffset.UTC)
-    val fmtMicro = DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS").withZone(ZoneOffset.UTC)
+    val fmtDate = DateTimeFormatter.ofPattern("yyyy-MM-dd").withZone(zone)
+    val fmtSec = DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss").withZone(zone)
+    val fmtMicro = DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS").withZone(zone)
     def cell(r: Row, i: Int): String =
       if (isTs(i)) {
         if (r.isNullAt(i)) "\"\"" // NaT → quoted empty field
@@ -286,25 +308,23 @@ object TableIo {
     sb.toString.getBytes("UTF-8")
   }
 
-  /** S7 — XLSX sink, mirror of S4 (ref 410-417, 620-627). */
-  def writeXlsx(df: DataFrame, storage: StorageClient, folder: String,
-                name: String): String = {
-    val out = DedupOps.sortAndDropOrdinal(df)
-    storage.writeBytes(folder, name, Xlsx.write(out.columns.toSeq, stringRows(out)))
-  }
-
-  /** Render every column to Option[String]; timestamps ISO, seconds
-    * precision when sub-second is zero (pandas CSV rendering). */
-  private def stringRows(df: DataFrame): Seq[Seq[Option[String]]] = {
-    val rendered = df.select(df.schema.fields.map { f =>
+  /** XLSX cells: timestamps `yyyy-MM-dd HH:mm:ss` in the session time zone
+    * with fractional seconds truncated, strings as-is, nulls empty. No
+    * pipeline emits another type, so any other column is refused by name
+    * rather than rendered some new way. */
+  private def xlsxRows(t: Collected): Seq[Seq[Option[String]]] = {
+    val fmtSec = DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss").withZone(t.zone)
+    val render: IndexedSeq[(Row, Int) => String] = t.fields.map { f =>
       f.dataType match {
-        case TimestampType =>
-          date_format(col(f.name), "yyyy-MM-dd HH:mm:ss").as(f.name)
-        case _ => col(f.name).cast(StringType).as(f.name)
+        case TimestampType => (r: Row, i: Int) => fmtSec.format(instantAt(r, i))
+        case StringType => (r: Row, i: Int) => r.getString(i)
+        case other => throw new IllegalArgumentException(
+          s"XLSX sink: column '${f.name}' has type ${other.simpleString}; " +
+            "only string and timestamp columns are written")
       }
-    }.toIndexedSeq: _*)
-    rendered.collect().toSeq.map(r =>
-      r.toSeq.map(v => Option(v).map(_.toString)))
+    }
+    t.rows.toSeq.map(r => t.fields.indices.map(i =>
+      if (r.isNullAt(i)) None else Some(render(i)(r, i))))
   }
 
   // pandas' C writer (lineterminator '\n', QUOTE_MINIMAL) quotes a field

@@ -20,7 +20,7 @@ class CsvRoundtripSpec extends SparkSpec {
       .withColumn("_ingest_ord", monotonically_increasing_id())
     val dir = Files.createTempDirectory("graft_csv").toString
     val storage = new LocalFsStorage
-    val path = TableIo.writeCsv(df, storage, dir, "t.csv")
+    val Seq(path, _) = TableIo.writeCsvXlsx(df, storage, dir, "t.csv", "t.xlsx")
 
     val back = spark.read.option("header", "true").option("multiLine", "true")
       .option("escape", "\"")
@@ -83,6 +83,37 @@ class CsvRoundtripSpec extends SparkSpec {
     val got = new String(TableIo.csvBytes(df), "UTF-8")
     assert(got == expected,
       s"pandas byte parity broken:\n got=${got.replace("\n", "\\n").replace("\r", "\\r")}\n exp=${expected.replace("\n", "\\n").replace("\r", "\\r")}")
+  }
+
+  test("writeCsvXlsx: XLSX cells in ingest order, null and sub-second timestamps, unsupported type refused") {
+    import spark.implicits._
+    def ts(s: String) = java.sql.Timestamp.valueOf(s)
+    val df = Seq(
+      ("b", Option(ts("2024-07-01 08:30:00.123456")), 2L),
+      ("a", Option.empty[java.sql.Timestamp], 1L),
+      ("c", Option(ts("2024-07-02 00:00:00")), 3L))
+      .toDF("k", "at", "_ingest_ord")
+    val storage = new LocalFsStorage
+    val dir = Files.createTempDirectory("graft_sinks").toString
+    val Seq(csvPath, xlsxPath) =
+      TableIo.writeCsvXlsx(df, storage, dir, "t.csv", "t.xlsx")
+    assert(new String(storage.readBytes(csvPath), "UTF-8") ==
+      "k,at\na,\"\"\nb,2024-07-01 08:30:00.123456\nc,2024-07-02 00:00:00\n")
+    val (h, rows) = Xlsx.readTable(storage.readBytes(xlsxPath))
+    assert(h == Seq("k", "at"))
+    // null → empty cell; fractional seconds truncated, as date_format did
+    assert(rows == Seq(
+      Seq(Some("a"), None),
+      Seq(Some("b"), Some("2024-07-01 08:30:00")),
+      Seq(Some("c"), Some("2024-07-02 00:00:00"))))
+
+    val refused = Files.createTempDirectory("graft_sinks_bad")
+    val err = intercept[IllegalArgumentException] {
+      TableIo.writeCsvXlsx(df.withColumn("n", lit(1)), storage,
+        refused.toString, "t.csv", "t.xlsx")
+    }
+    assert(err.getMessage.contains("'n'"), err.getMessage)
+    assert(Files.list(refused).count() == 0, "a refused frame must write no file")
   }
 
   test("withIngestOrdinalFrom: contiguous 1-based ordinal in key order, no global window") {

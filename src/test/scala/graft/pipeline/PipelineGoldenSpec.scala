@@ -22,6 +22,22 @@ class PipelineGoldenSpec extends SparkSpec {
     assert(TableIo.csvBytes(out).sameElements(golden("pua_output.csv")))
   }
 
+  test("PUA golden holds under a non-UTC session time zone") {
+    // try_to_timestamp parses in the session zone, so the sink must render
+    // in it too: `2025-01-15` stays a date-only midnight, not 06:00:00 UTC
+    val key = "spark.sql.session.timeZone"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, "America/Chicago")
+    try {
+      // built after the switch: analysis binds the zone into the plan
+      val out = PuaPipeline.run(PuaPipeline.Inputs(
+        df(spark, PuaColumns, PuaRows), df(spark, TsOrgColumns, TsOrgRows),
+        df(spark, TsDeptColumns, TsDeptRows),
+        df(spark, OvertimeColumns, OvertimeRows), df(spark, TeMColumns, TeMRows)))
+      assert(TableIo.csvBytes(out).sameElements(golden("pua_output.csv")))
+    } finally spark.conf.set(key, saved)
+  }
+
   test("CPA pipeline output bytes match the golden CSV") {
     val out = CpaPipeline.run(CpaPipeline.Inputs(
       df(spark, CertColumns, CertBwRows), df(spark, CertColumns, CertMnRows),
