@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.{DedupOperators, TemporalJoins}
 import graft.functions.{TextFunctions => T}
+import graft.ops.ColumnOps.cents
 
 /** Round-2 analytics operators: temporal joins (as-of, range), window
   * analytics, pivot/unpivot reshapes, grouped distinct counts, dup-group
@@ -18,9 +19,6 @@ import graft.functions.{TextFunctions => T}
   * cents (`round(x*100)`) so cross-engine hashes are exact.
   */
 object AnalyticsQueries {
-
-  private def cents(c: org.apache.spark.sql.Column) =
-    round(c * 100).cast("long")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Q28 — backward as-of join: each view event picks up the same user's

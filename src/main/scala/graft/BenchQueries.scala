@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.BucketOps
+import graft.ops.ColumnOps.cents
 
 /** Headline analytic queries (bench flagships): a TPC-H-Q1-style pricing
   * summary and a Q5-style revenue join, shaped for the engine's scale
@@ -14,9 +15,6 @@ import graft.ops.BucketOps
   * summation order — float accumulation order would differ between Spark
   * partial aggregates and the oracle. */
 object BenchQueries {
-
-  private def cents(c: org.apache.spark.sql.Column) =
-    round(c * 100).cast("long")
 
   /** The pay-once ORC fact layout PARTITIONED BY l_returnflag (the
     * b03/b05 device on the second columnar format) — shared by x172

@@ -1559,6 +1559,23 @@ object CorpusQueries {
       .withColumn("dup_ppm", expr("(n_dup * 1000000) DIV n_spans"))
   }
 
+  /** Longest common prefix of two strings of at most `window` chars, as
+    * a long. Prefix match is monotone (a mismatch at char i rules out
+    * every longer prefix), so the first differing 1-char substring pins
+    * LCP = i − 1 and the ascending CASE chain short-circuits there. If
+    * the strings differ at no position in 1..window, the shorter is a
+    * prefix of the longer and LCP = min(la, lb). A strict prefix still
+    * stops early — substring past its end yields "", which differs from
+    * the longer side's char at i = min + 1 — and that arm returns the
+    * same min. Every arm is a codegen'd single-char compare, so a pair
+    * costs O(window) chars. */
+  def lcpExpr(a: Column, b: Column, window: Int): Column =
+    (1 to window).foldRight(least(length(a), length(b)).cast("long")) {
+      case (i, tail) =>
+        when(substring(a, i, 1) =!= substring(b, i, 1), lit((i - 1).toLong))
+          .otherwise(tail)
+    }
+
   /** X150 core — SHORT-duplicate recovery: the recall complement of
     * x67/x121 for shared regions in [tau, window) chars, which BOTH
     * miss — x67 needs offsets agreeing mod stride, x121 needs the full
@@ -1574,11 +1591,10 @@ object CorpusQueries {
     * and verify the common-prefix length >= tau; the evidence is graded
     * (the actual shared length), not fixed-granularity.
     *
-    * Prefix length = size(filter(sequence(1, m), i -> prefix_i(a) =
-    * prefix_i(b))) — prefix equality is monotone, so the indicator sum
-    * IS the prefix length; the identical spelling runs in both engines
-    * (no fold-semantics hazard). O(window²) chars per pair, pairs are
-    * (w−1)·N — data-independent fan-out, x95's no-hot-block property.
+    * The common-prefix length is [[lcpExpr]]: a codegen'd CASE chain of
+    * single-char compares that stops at the first differing position,
+    * so O(window) chars per pair; pairs are (w−1)·N — data-independent
+    * fan-out, x95's no-hot-block property.
     *
     * Scale shape: anchors are one precompiled pass per row (CdcBounds);
     * the global sort rank is the range-split prefix-sum kernel (never a
@@ -1614,27 +1630,10 @@ object CorpusQueries {
     val hi = ord.select(col("rn").as("rn_b"), col("span").as("sp_b"),
                         col("doc_id").as("id_b"))
       .withColumn("blk", expr(s"rn_b div ${w - 1}"))
-    // longest common prefix, exact: prefix-match is monotone (a mismatch
-    // at char i rules out every longer prefix), so the first differing
-    // 1-char substring pins LCP = i - 1 and the ascending CASE chain
-    // short-circuits there; if no position in 1..window differs, the
-    // shorter span is a prefix of the longer and LCP = min(la, lb)
-    // (substring past a span's end yields "" and differs from the longer
-    // side's char, so the prefix-of case never stops early). Every arm
-    // is a codegen'd single-char compare — r17: replaces the interpreted
-    // sequence/filter HOF that allocated and compared 2·min(la,lb)
-    // PREFIX substrings per pair through per-element lambda dispatch
-    // (O(window²) chars and the last CPU hotspot of this query).
-    val lcp = (1 to window).foldRight(
-        least(length(col("sp_a")), length(col("sp_b"))).cast("long")) {
-      case (i, tail) =>
-        when(substring(col("sp_a"), i, 1) =!= substring(col("sp_b"), i, 1),
-             lit((i - 1).toLong)).otherwise(tail)
-    }
     val pairs = lo.join(hi, Seq("blk"))
       .filter((col("rn_b") - col("rn_a")).between(1, w - 1) &&
               col("id_a") =!= col("id_b"))
-      .withColumn("pfx", lcp)
+      .withColumn("pfx", lcpExpr(col("sp_a"), col("sp_b"), window))
       .filter(col("pfx") >= tau)
     pairs.select(explode(array(
         struct(col("id_a").as("doc_id"), col("sp_a").as("span"), col("pfx")),

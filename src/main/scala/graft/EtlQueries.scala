@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.ops.ColumnOps.cents
 
 /** Warehouse-maintenance operators: SCD1 upsert (MERGE), snapshot diff
   * (CDC), and column profiling — the remaining ETL verbs a user of a
@@ -15,8 +16,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * map-side) plus one hash agg keyed by column name — column count,
   * not row count, bounds the group cardinality. */
 object EtlQueries {
-
-  private def cents(c: Column) = round(c * 100).cast("long")
 
   /** q117 core — maintain the join view V = γ_prio(count, sum c) of
     * fact ⋈ dim under a SIGNED delta batch: `batch` rows carry

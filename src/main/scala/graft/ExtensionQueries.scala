@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.{TextFunctions => T, VectorFunctions => V}
+import graft.ops.ColumnOps.cents
 
 /** Training-data-pipeline extension operators (SURVEY.md §7.5 north star):
   * text analysis, exact/near dedup (MinHash, SimHash, n-gram Jaccard),
@@ -752,7 +753,6 @@ object ExtensionQueries {
     "x122_advised_revenue" -> ((s, dir) => {
       import graft.ops.JoinAdvisorOps
       import graft.ops.JoinAdvisorOps.JoinEdge
-      def cents(c: Column) = round(c * 100).cast("long")
       val rels: Map[String, DataFrame] = Map(
         "lineitem" -> Tables(s, dir, "lineitem")
           .select(col("l_orderkey"), cents(col("l_extendedprice")).as("_ep"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.ops.ColumnOps.cents
 
 /** Round-3 coverage: the scalar-function surface (array / string / regexp /
   * conditional / bitwise batteries), global top-k, exact single-pass moment
@@ -33,9 +34,6 @@ import org.apache.spark.sql.types.DecimalType
   *    reproducible train/val/test assignment for a training corpus.
   */
 object FunctionQueries {
-
-  private def cents(c: org.apache.spark.sql.Column) =
-    round(c * 100).cast("long")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Q50 — global top-k: ORDER BY ... LIMIT plans as per-partition top-k

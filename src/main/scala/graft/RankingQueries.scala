@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{TextFunctions => T}
+import graft.ops.ColumnOps.cents
 
 /** Round-6 ranking & allocation analytics: iterative PageRank over the
   * co-purchase graph, calendar-day activity streaks, largest-remainder
@@ -26,9 +27,6 @@ import graft.functions.{TextFunctions => T}
   * fingerprint's min-id, both sides hash-partitioned by the same key.
   */
 object RankingQueries {
-
-  private def cents(c: org.apache.spark.sql.Column) =
-    round(c * 100).cast("long")
 
   // x137 fusion parameters — interpolated into the oracle SQL so the two
   // sides cannot drift: Q probe queries, top-ARM per arm, the classic

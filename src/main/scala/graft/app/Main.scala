@@ -37,14 +37,20 @@ object Main {
     val lookupCatalog = Catalog.build(spark, storage, lookupRoot)
     val summaries = scala.collection.mutable.ArrayBuffer.empty[LoadSummary]
 
-    // a lookup CSV that is not found is warned about and its pipeline
-    // skipped (the reference's warn-and-skip, ref 85-86, 131-132, 152-153)
+    // an input that is not found is warned about and its pipeline skipped
+    // (the reference's warn-and-skip, ref 85-86, 131-132, 152-153)
+    def skipIfMissing(label: String, df: Option[DataFrame]): Option[DataFrame] = {
+      if (df.isEmpty) {
+        summaries += LoadSummary(label, found = false, 0L)
+        System.err.println(s"[graft] WARN: input '$label' not found — skipping")
+      }
+      df
+    }
     def loadCsv(label: String, matches: Column): Option[DataFrame] = {
       val m = Catalog.firstMatch(lookupCatalog, matches)
       val df = m.map(f => TableIo.readCsv(spark, f.file_path))
-      summaries += LoadSummary(label, df.isDefined, df.map(_.count()).getOrElse(0L))
-      if (df.isEmpty) System.err.println(s"[graft] WARN: input '$label' not found — skipping")
-      df
+      df.foreach(d => summaries += LoadSummary(label, found = true, d.count()))
+      skipIfMissing(label, df)
     }
     def loadCsvByName(name: String): Option[DataFrame] =
       loadCsv(name, Catalog.nameEquals(name))
@@ -54,7 +60,8 @@ object Main {
     // primary PUA extract: substring "PUA" + Excel extension (ref 67-70)
     val puaFile = Catalog.firstMatch(catalog,
       Catalog.nameContains("PUA") && Catalog.hasExtension(".xlsx", ".xls"))
-    val pua = puaFile.map(f => TableIo.readXlsx(spark, storage, f.file_path))
+    val pua = skipIfMissing("*PUA*.xlsx",
+      puaFile.map(f => TableIo.readXlsx(spark, storage, f.file_path)))
     // the CPA Excel and YTD/Feeder_List inputs are loaded for load-summary
     // parity but never consumed (SURVEY.md §0 dead inputs)
     val cpaDead = Catalog.firstMatch(catalog,

@@ -43,11 +43,6 @@ object VectorFunctions {
   def quantizeInt8(v: Column, scale: Column): Column =
     transform(toDouble(v), x => round(x * 127.0d / scale).cast("int"))
 
-  /** Dequantize back to doubles (q·scale/127) — same elementwise-exact
-    * contract as [[quantizeInt8]]. */
-  def dequantizeInt8(q: Column, scale: Column): Column =
-    transform(q, x => x.cast("double") * scale / 127.0d)
-
   /** Cosine similarity; null when either norm is zero. */
   def cosine(a: Column, b: Column): Column = {
     val d = dot(a, b)

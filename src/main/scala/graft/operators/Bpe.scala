@@ -132,16 +132,16 @@ object Bpe {
     * jobs each — which is perfect for 8 oracle-checkable rounds and
     * unusable for the 32k-merge vocabulary the GPT-2/LLaMA recipe
     * implies (32k driver iterations × per-job overhead dwarfs the
-    * arithmetic). MEASURED on the sf0.01 word domain (ProbeBpe,
-    * rounds=64 — the deepest the corpus's vocabulary supports before
-    * pair exhaustion): the per-round loop takes 21.1 s (~0.33 s/round,
-    * pure job overhead — the data is 31 rows) vs 0.83 s here, FLAT in
-    * rounds; at 32k merges the loop extrapolates to ~3 hours of
-    * scheduling against seconds of driver arithmetic. The deployment
-    * shape at 100 TB: ONE corpus-sized distributed word count feeds
-    * `words`; everything after is |vocab|-bounded driver arithmetic —
-    * exactly how production BPE trainers (GPT-2's, SentencePiece)
-    * structure the work.
+    * arithmetic). MEASURED on the sf0.01 word domain (SCALING.md,
+    * "Batched BPE trainer" table; rounds=64 — the deepest the corpus's
+    * vocabulary supports before pair exhaustion): the per-round loop
+    * takes 21.1 s (~0.33 s/round, pure job overhead — the data is 31
+    * rows) vs 0.83 s here, FLAT in rounds; at 32k merges the loop
+    * extrapolates to ~3 hours of scheduling against seconds of driver
+    * arithmetic. The deployment shape at 100 TB: ONE corpus-sized
+    * distributed word count feeds `words`; everything after is
+    * |vocab|-bounded driver arithmetic — exactly how production BPE
+    * trainers (GPT-2's, SentencePiece) structure the work.
     *
     * Determinism notes, pinned to [[train]]'s semantics: words split to
     * CODE POINTS (Spark's `substring`/`length` are code-point-based);
@@ -318,9 +318,9 @@ object Bpe {
     * REFERENCE for the delta-maintenance trainer (BpePropertySpec
     * proves delta ≡ recount merge-for-merge at depths the Spark loop
     * cannot reach in test time) and as the honesty baseline for the
-    * ProbeBpe scaling row. Not guarded by maxVocab: callers are the
-    * spec and the probe, both on domains the public path has already
-    * bounded. */
+    * SCALING.md "Delta-maintained BPE trainer" table. Not guarded by
+    * maxVocab: its caller is the spec, on domains the public path has
+    * already bounded. */
   private[graft] def trainCollectedRecount(words: DataFrame, rounds: Int)
       : (DataFrame, DataFrame) = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")

@@ -314,7 +314,8 @@ object DedupOperators {
     // bench SF the explicit repartition PINS the cached edge frame at
     // spark.sql.shuffle.partitions forever (user-specified repartitions
     // are exempt from AQE coalescing), forcing every round into
-    // full-width task waves over near-empty partitions: TimeMany A/B/A
+    // full-width task waves over near-empty partitions: an A/B/A of warm
+    // medians (OPTIMIZATION_r17.md, "clusterPairs" row)
     // showed +0.4–1.6 s on ALL of x14/x74/x92/x103 and no win even on
     // x102. Kept un-partitioned: AQE sizes each round's exchanges to the
     // data, which is also the honest cluster-scale default (the edge

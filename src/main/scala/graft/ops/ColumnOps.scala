@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, TimestampType}
+import org.apache.spark.sql.types.StringType
 
 /** Scalar / derived-column operators (SURVEY.md §2.1 D1–D15).
   *
@@ -71,26 +71,30 @@ object ColumnOps {
   def defaultIfMissing(c: Column, default: String): Column =
     when(isMissingMarker(c), lit(default)).otherwise(c)
 
+  /** A money column as whole cents, exact in integer arithmetic. */
+  def cents(c: Column): Column = round(c * 100).cast("long")
+
   /** D12 — lowercased filename extension (ref 44). */
   def extensionOf(fileName: Column): Column =
     lower(regexp_extract(fileName, "(\\.[^.]*)$", 1))
 
   /** D14 — blanket strip of all string-typed columns with the H2 null→"nan"
-    * side effect (CPA ref 476-478). */
-  def blanketStrip(df: DataFrame): DataFrame = {
+    * side effect (CPA ref 476-478); `skip` columns pass through. */
+  def blanketStrip(df: DataFrame, skip: Set[String]): DataFrame = {
     val cols = df.schema.fields.map { f =>
-      if (f.dataType == StringType) castStrNanNull(col(f.name)).as(f.name)
-      else col(f.name)
+      if (skip.contains(f.name) || f.dataType != StringType) col(f.name)
+      else castStrNanNull(col(f.name)).as(f.name)
     }
     df.select(cols.toIndexedSeq: _*)
   }
 
-  /** D15 — type-normalize all columns to trimmed string except timestamps
-    * (PUA ref 319-322, 370-374). */
-  def retypeAllString(df: DataFrame, keepTimestamp: Set[String]): DataFrame = {
+  /** D15 — every column to a trimmed string (`astype("string").str.strip()`,
+    * nulls kept) except `tsCol`, which is parsed with coerce, and the
+    * `skip` columns, which pass through (PUA ref 319-322, 370-374). */
+  def retypeAllString(df: DataFrame, tsCol: String, skip: Set[String]): DataFrame = {
     val cols = df.schema.fields.map { f =>
-      if (keepTimestamp.contains(f.name)) toTimestampCoerce(col(f.name)).as(f.name)
-      else if (f.dataType == TimestampType) col(f.name)
+      if (skip.contains(f.name)) col(f.name)
+      else if (f.name == tsCol) toTimestampCoerce(col(f.name)).as(f.name)
       else ensureString(col(f.name)).as(f.name)
     }
     df.select(cols.toIndexedSeq: _*)

@@ -63,10 +63,10 @@ object PrefixSumOps {
     // Accuracy only balances tasks (a cut off by 1/accuracy of the domain
     // shifts that many rows between neighboring ranges); 500 bounds
     // imbalance to 0.2% of a group — ample for task balance — at a
-    // measurably cheaper sketch than the earlier 2000 (ProbeMad: the
-    // a=2000 sketch pass was 3.5 s cold / 0.60 s warm on q113's domain,
-    // a=100 1.3 / 0.45 — the bench re-pays the cold path every pass via
-    // clearCache). Results are accuracy-independent by construction:
+    // measurably cheaper sketch than the earlier 2000 (OPTIMIZATION_r17.md,
+    // "PrefixSumOps sketch accuracy" row: the a=2000 sketch pass was
+    // 3.5 s cold / 0.60 s warm on q113's domain, a=100 1.3 / 0.45 — the
+    // bench re-pays the cold path every pass via clearCache). Results are accuracy-independent by construction:
     // the sketch places cuts, never values.
     val qs = (1 until splits).map(_.toDouble / splits)
     val bounds = in.groupBy(gCols: _*)

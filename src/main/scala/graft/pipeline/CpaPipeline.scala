@@ -76,7 +76,7 @@ object CpaPipeline {
                    castStrNanNull(col("JOB_TS_ORGN"))))
       .withColumn("Dept TS-Org", prefix(col("TS-Org Code"), 5))
     // D14 blanket strip of all string columns, null → "nan" (ref 476-478)
-    df = blanketStripExcept(df, Set(ord, "TRAN_CREATE_DT"))
+    df = blanketStrip(df, Set(ord, "TRAN_CREATE_DT"))
     df = df
       .withColumn("JOB_ECLS", castStrNanNull(col("JOB_ECLS")))
       .withColumn("PAY_ID", castStrNanNull(col("PAY_ID")))
@@ -153,14 +153,5 @@ object CpaPipeline {
       "JOB_ECLS" -> "E-Class Code", "E-Class Description" -> "E-Class",
       "Overtime FLSA" -> "Overtime"))
     df.select((FinalColumns.map(col) :+ col(ord)): _*)
-  }
-
-  /** D14 with exclusions for engine bookkeeping columns. */
-  private def blanketStripExcept(df: DataFrame, skip: Set[String]): DataFrame = {
-    val cols = df.schema.fields.map { f =>
-      if (skip.contains(f.name) || f.dataType != StringType) col(f.name)
-      else ColumnOps.castStrNanNull(col(f.name)).as(f.name)
-    }
-    df.select(cols.toIndexedSeq: _*)
   }
 }

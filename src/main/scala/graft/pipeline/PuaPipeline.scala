@@ -143,7 +143,7 @@ object PuaPipeline {
     df = DedupOps.dedupKeepFirst(df, Seq("UIN", "Pay Event", "Job Number"))
 
     // --- D15 retype + D11 ADJ default (ref 319-328) ---------------------
-    df = retypeAllStringsExcept(df, "Calc Date", ord)
+    df = retypeAllString(df, "Calc Date", Set(ord))
     if (df.columns.contains("ADJ Reason Code")) {
       // materialize the mask BEFORE overwriting the code column — the DESC
       // update uses the same mask over the ORIGINAL value (ref 325-328)
@@ -161,23 +161,10 @@ object PuaPipeline {
     var out = df.select((ColMap.map { case (o, s) =>
       (if (df.columns.contains(s)) col(s) else lit(null).cast(StringType)).as(o)
     } :+ col(ord)): _*)
-    out = retypeAllStringsExcept(out, "Calc Date", ord)
+    out = retypeAllString(out, "Calc Date", Set(ord))
     out = out
       .withColumnRenamed("TS Org", "TS ORG")
       .withColumnRenamed("Adjustment Reason", "Adjustment Reason Description")
     out
-  }
-
-  /** ref 319-322 / 370-374: every column except Calc Date →
-    * astype("string").str.strip() (nulls kept); Calc Date → to_datetime
-    * with coerce. */
-  private def retypeAllStringsExcept(df: DataFrame, tsCol: String,
-                                     ordCol: String): DataFrame = {
-    val cols = df.schema.fields.map { f =>
-      if (f.name == ordCol) col(f.name)
-      else if (f.name == tsCol) ColumnOps.toTimestampCoerce(col(f.name)).as(f.name)
-      else ColumnOps.ensureString(col(f.name)).as(f.name)
-    }
-    df.select(cols.toIndexedSeq: _*)
   }
 }

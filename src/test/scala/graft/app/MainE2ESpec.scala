@@ -22,13 +22,15 @@ class MainE2ESpec extends SparkSpec {
   }
 
   /** The fixture drop on disk: inputs/ and lookups/ under a fresh temp
-    * directory; `withBw = false` leaves out the BW certification CSV. */
-  private def writeDrop(withBw: Boolean = true): java.nio.file.Path = {
+    * directory; `withBw = false` leaves out the BW certification CSV and
+    * `withPua = false` the PUA workbook. */
+  private def writeDrop(withBw: Boolean = true,
+                        withPua: Boolean = true): java.nio.file.Path = {
     val root = Files.createTempDirectory("graft_e2e")
     val inDir = root.resolve("inputs"); val lkDir = root.resolve("lookups")
     Files.createDirectories(inDir); Files.createDirectories(lkDir)
     // primary PUA extract as a real XLSX produced by our own codec
-    Files.write(inDir.resolve("Monthly PUA Extract.xlsx"),
+    if (withPua) Files.write(inDir.resolve("Monthly PUA Extract.xlsx"),
       Xlsx.write(PuaColumns, PuaRows))
     // lookups + certs as CSVs with the reference's exact names/patterns
     Files.write(lkDir.resolve("TS_Org.csv"), csvBytes(TsOrgColumns, TsOrgRows))
@@ -162,17 +164,28 @@ class MainE2ESpec extends SparkSpec {
       s"expected one sink execution per pipeline, got ${sinkExecs.get}")
   }
 
-  test("a missing BW certification CSV warns and skips only the CPA pipeline") {
-    val root = writeDrop(withBw = false)
+  /** Runs Main over `root`, returning what it wrote and its stderr. */
+  private def runMainCapturingErr(root: java.nio.file.Path): (Seq[String], String) = {
     val err = new java.io.ByteArrayOutputStream
     val saved = System.err
     System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
     val written = try runMain(root) finally System.setErr(saved)
-    assert(written.size == 2 && written.forall(_.contains("PUA_Data_Transformed")),
-      s"expected only the two PUA outputs, got $written")
     val outFiles = Files.list(root.resolve("out")).toArray.map(_.toString).toSeq
     assert(outFiles.sorted == written.sorted)
-    assert(err.toString("UTF-8").contains(
-      "[graft] WARN: input '*BW*' not found — skipping"), err.toString("UTF-8"))
+    (written, err.toString("UTF-8"))
+  }
+
+  test("a missing BW certification CSV warns and skips only the CPA pipeline") {
+    val (written, err) = runMainCapturingErr(writeDrop(withBw = false))
+    assert(written.size == 2 && written.forall(_.contains("PUA_Data_Transformed")),
+      s"expected only the two PUA outputs, got $written")
+    assert(err.contains("[graft] WARN: input '*BW*' not found — skipping"), err)
+  }
+
+  test("a missing PUA workbook warns and skips only the PUA pipeline") {
+    val (written, err) = runMainCapturingErr(writeDrop(withPua = false))
+    assert(written.size == 2 && written.forall(_.contains("CPA_Data_Transformed")),
+      s"expected only the two CPA outputs, got $written")
+    assert(err.contains("[graft] WARN: input '*PUA*.xlsx' not found — skipping"), err)
   }
 }
